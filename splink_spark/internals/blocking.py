@@ -60,6 +60,9 @@ class BlockingRule:
         self.columns = list(columns)
         # builder spec for JSON round-trip (set by the DSL constructors)
         self.spec: Optional[dict] = None
+        # every base column the rule reads, when known from its key
+        # expressions (block_on); None means "parse the description"
+        self.input_columns: Optional[list[str]] = None
         # the equi-join key expressions (ColumnExpression list) when the rule
         # is pure equality blocking — powers the pre-filter blocking analysis
         # (reference blocking_analysis.py:78-190 `_equi_join_conditions`)
@@ -111,6 +114,9 @@ def block_on(
         salting_partitions=salting_partitions,
         columns=[ce.name for ce in ces if ce.is_pure_column_reference],
         exploded_columns=list(arrays_to_explode or ()),
+    )
+    rule.input_columns = list(
+        dict.fromkeys(c for ce in ces for c in ce.input_columns)
     )
     rule.spec = {
         "builder": "block_on",
@@ -392,8 +398,9 @@ def block_using_rules(
                 "carry-through blocking output is not supported with "
                 "exploding rules (pair dedup must run on ids)"
             )
+        # the junction re-join's column order: every _l column, then every _r
         out_cols = [F.col("match_key")] + [
-            F.col(f"{c}_{side}") for c in output_columns for side in ("l", "r")
+            F.col(f"{c}_{side}") for side in ("l", "r") for c in output_columns
         ]
     else:
         out_cols = [
@@ -410,14 +417,17 @@ def block_using_rules(
                 F.col(f"{source_dataset_column_name}_r").alias("source_dataset_r"),
             ] + out_cols[1:]
 
+    # the suffixed sides are shared by every non-exploding rule
+    lhs_all, rhs_all = suffix_all(left_raw, "_l"), suffix_all(right_raw, "_r")
     results: list[DataFrame] = []
     for k, rule in enumerate(rules):
-        df_l, df_r = left_raw, right_raw
-        for arr_col in rule.exploded_columns:
-            df_l = df_l.withColumn(arr_col, F.explode(arr_col))
-            df_r = df_r.withColumn(arr_col, F.explode(arr_col))
-        lhs = suffix_all(df_l, "_l")
-        rhs = suffix_all(df_r, "_r")
+        lhs, rhs = lhs_all, rhs_all
+        if rule.exploded_columns:
+            df_l, df_r = left_raw, right_raw
+            for arr_col in rule.exploded_columns:
+                df_l = df_l.withColumn(arr_col, F.explode(arr_col))
+                df_r = df_r.withColumn(arr_col, F.explode(arr_col))
+            lhs, rhs = suffix_all(df_l, "_l"), suffix_all(df_r, "_r")
 
         # multi-rule dedup: AND NOT (coalesce(prev_rule_j, false) OR ...)
         cond = rule.condition()

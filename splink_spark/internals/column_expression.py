@@ -144,6 +144,11 @@ class ColumnExpression:
     def is_pure_column_reference(self) -> bool:
         return not self.transforms
 
+    @property
+    def input_columns(self) -> list[str]:
+        """Base columns the expression reads."""
+        return [self.name]
+
     def __repr__(self) -> str:  # pragma: no cover
         return f"ColumnExpression({self.name!r}, {len(self.transforms)} transforms)"
 
@@ -234,6 +239,18 @@ class SqlColumnExpression(ColumnExpression):
     @property
     def is_pure_column_reference(self) -> bool:
         return False
+
+    @property
+    def input_columns(self) -> list[str]:
+        """The identifiers ``l()``/``r()`` would suffix: column names, not
+        function names, keywords or literals (``substr(dob, 1, 4)`` reads
+        ``dob``)."""
+        import re
+
+        # suffix every identifier with a NUL mark, then read the marks back
+        marked = suffix_sql_identifiers(self.sql, "\0")
+        found = re.findall(r"`([^`]*)\0`|([A-Za-z_][A-Za-z0-9_]*)\0", marked)
+        return list(dict.fromkeys(a or b for a, b in found))
 
     def as_dict(self) -> dict:
         return {"name": self.sql, "sql": self.sql}

@@ -177,6 +177,14 @@ class MaterializationPolicy:
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
 
+    def release(self, df: DataFrame | None) -> None:
+        """Unpersist one registered frame and forget it (no-op for None)."""
+        if df is None:
+            return
+        df.unpersist()
+        if df in self._registry:
+            self._registry.remove(df)
+
     def unpersist_all(self) -> None:
         for df in self._registry:
             try:

@@ -171,9 +171,11 @@ def _to_rule(rule: Union[str, BlockingRule]) -> BlockingRule:
 def referenced_base_columns(settings: Settings) -> list[str]:
     """Every base input column the model reads: comparison inputs, TF
     columns, blocking-rule columns, and additional_columns_to_retain.
-    Blocking rules contribute their parsed equality keys plus any suffixed
-    ``<col>_l`` / ``<col>_r`` identifiers found in the (normalised) rule SQL
-    outside string literals."""
+    ``block_on`` rules contribute the columns of their key expressions
+    (``substr(dob, 1, 4)`` reads ``dob``); other rules contribute their
+    parsed equality keys plus any suffixed ``<col>_l`` / ``<col>_r``
+    identifiers found in the (normalised) rule SQL outside string
+    literals."""
     import re
 
     cols: list[str] = []
@@ -188,6 +190,10 @@ def referenced_base_columns(settings: Settings) -> list[str]:
         for c in comp.tf_adjustment_input_columns:
             add(c)
     for rule in settings.blocking_rules_to_generate_predictions:
+        if rule.input_columns is not None:
+            for c in rule.input_columns:
+                add(c)
+            continue
         for c in rule.columns or []:
             add(c)
         sql = _normalise_rule_sql(rule.description or "")

@@ -7,12 +7,13 @@ and :79-109 — LEFT JOIN each tf table back onto the concat.
 
 Scale notes: the denominator is computed with a map-side partial count (one
 aggregate, no window over all rows); tf tables are ~|distinct values| rows so
-the re-join broadcasts.
+the re-join broadcasts. The Linker builds each table once and keeps it
+cached (``Linker.tf_tables``), so every consumer — the concat join, online
+probes, chart data — reads the same small table instead of re-aggregating
+the base.
 """
 
 from __future__ import annotations
-
-from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,8 +48,3 @@ def join_term_frequencies(
         out = out.join(F.broadcast(tf), on=column, how="left")
     return out
 
-
-def compute_all_term_frequencies(
-    concat: DataFrame, columns: Iterable[str], tf_prefix: str = "tf_"
-) -> dict[str, DataFrame]:
-    return {c: compute_term_frequencies(concat, c, tf_prefix=tf_prefix) for c in columns}

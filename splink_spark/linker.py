@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .internals.blocking import BlockingRule, block_using_rules, count_comparisons_per_rule
 from .internals.comparison_vectors import (
+    _needed_columns,
     blocked_pairs_with_columns,
     compute_comparison_vectors,
 )
@@ -24,7 +25,7 @@ from .internals.materialize import MaterializationPolicy
 from .internals.predict import predict_from_comparison_vectors
 from .internals.settings import Settings
 from .internals.term_frequencies import (
-    compute_all_term_frequencies,
+    compute_term_frequencies,
     join_term_frequencies,
 )
 from .internals.vertically_concatenate import (
@@ -79,6 +80,8 @@ class Linker:
         self._concat: Optional[DataFrame] = None
         self._concat_with_tf: Optional[DataFrame] = None
         self._tf_tables: Optional[dict[str, DataFrame]] = None
+        # the latest find_matches_to_new_records probe, cached per request
+        self._probe: Optional[DataFrame] = None
         # user-registered blocked pairs (table_management): when set,
         # predict() scores these instead of running the blocking join
         self._registered_blocked_pairs: Optional[DataFrame] = None
@@ -206,13 +209,57 @@ class Linker:
         return n
 
     def tf_tables(self) -> dict[str, DataFrame]:
+        """One TF table per TF column, built once per linker and persisted
+        lazily (the first consumer's broadcast populates it). Every consumer
+        — the concat join, online probes, predict_within/between,
+        compare_two_records, chart data — reads the same cached table;
+        ``invalidate_cache`` releases them."""
         if self._tf_tables is None:
-            self._tf_tables = compute_all_term_frequencies(
-                self.df_concat(),
-                self.settings.tf_columns,
-                tf_prefix=self.settings.term_frequency_adjustment_column_prefix,
-            )
+            concat = self.df_concat()
+            tfp = self.settings.term_frequency_adjustment_column_prefix
+            self._tf_tables = {
+                c: self._cache_tf_table(
+                    compute_term_frequencies(concat, c, tf_prefix=tfp)
+                )
+                for c in self.settings.tf_columns
+            }
         return self._tf_tables
+
+    def _cache_tf_table(self, tf: DataFrame) -> DataFrame:
+        """Persist a TF table in at most ``default_parallelism`` partitions:
+        it has ~|distinct values| rows, and a cached plan keeps its shuffle's
+        partition count, so every later broadcast of it would otherwise scan
+        ``spark.sql.shuffle.partitions`` near-empty partitions."""
+        from .internals.misc import default_parallelism
+
+        return self.materialization.materialize(
+            tf.coalesce(default_parallelism(self.spark)), "tf_table", eager=False
+        )
+
+    def _cache_probe(self, probe: DataFrame) -> DataFrame:
+        """Evaluate an online request's probe once into a cache, releasing
+        the previous request's. After the evaluation the cached plan's
+        statistics are the probe's real size, which is what the planner's
+        broadcast decision for the blocking join reads. Always a persist,
+        whatever the policy's method: a checkpoint would carry the origin
+        plan's size estimate, and a parquet copy would leave files behind
+        for every request."""
+        from pyspark import StorageLevel
+
+        self.materialization.release(self._probe)
+        self._probe = probe.persist(StorageLevel.MEMORY_AND_DISK)
+        self.materialization._registry.append(self._probe)
+        self._probe.count()
+        return self._probe
+
+    def _set_tf_table(self, column: str, tf: DataFrame) -> None:
+        """Replace one column's TF table, releasing the cached table it
+        replaces and the concat_with_tf built from it."""
+        tfs = self.tf_tables()
+        self.materialization.release(tfs.get(column))
+        tfs[column] = self._cache_tf_table(tf)
+        self.materialization.release(self._concat_with_tf)
+        self._concat_with_tf = None
 
     def df_concat_with_tf(self) -> DataFrame:
         """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81).
@@ -659,20 +706,39 @@ class LinkerInference:
         predict_between + find_matches_to_new_records.py:14-60). TF values for
         new records come from the base's TF tables (the
         register_term_frequency_lookup semantics, table_management.py:204-253).
+
+        Serving shape: the probe (new records joined to the linker's cached
+        TF tables) is evaluated once per request into a cache, which gives
+        the planner its real size. The cached base is then streamed through
+        one equi-join per blocking rule against the probe, which the planner
+        broadcasts when it is small, and the compared base columns are
+        carried through that join — no ids-only pair table, no junction
+        re-join of the base, no row count of the base. Only the latest
+        request's probe stays cached: it is released by the next request
+        and by ``invalidate_cache``. Exploding rules keep the ids-only join
+        and the junction (their pair dedup must run on ids).
         """
         s = self._l.settings
+        rules = s.blocking_rules_to_generate_predictions
         base = self._l.df_concat_with_tf()
-        new_tf = join_term_frequencies(new_records, self._l.tf_tables())
-        pairs = block_using_rules(
-            base,
-            s.blocking_rules_to_generate_predictions,
+        probe = self._l._cache_probe(
+            join_term_frequencies(new_records, self._l.tf_tables())
+        )
+        block = dict(
             link_type=s.link_type,
             unique_id_column_name=s.unique_id_column_name,
-            nodes_right=new_tf,
+            nodes_right=probe,
         )
-        with_cols = blocked_pairs_with_columns(
-            pairs, base, s, concat_with_tf_right=new_tf
-        )
+        if any(r.exploded_columns for r in rules):
+            pairs = block_using_rules(base, rules, **block)
+            with_cols = blocked_pairs_with_columns(
+                pairs, base, s, concat_with_tf_right=probe,
+                broadcast_nodes_max_rows=None,
+            )
+        else:
+            with_cols = block_using_rules(
+                base, rules, output_columns=_needed_columns(s, base), **block
+            )
         cv = compute_comparison_vectors(with_cols, s)
         return predict_from_comparison_vectors(cv, s)
 
@@ -1184,6 +1250,7 @@ class LinkerMisc:
         self._l._concat = None
         self._l._concat_with_tf = None
         self._l._tf_tables = None
+        self._l._probe = None
         self._l._registered_blocked_pairs = None
 
 
@@ -1195,33 +1262,21 @@ class LinkerTableManagement:
     def __init__(self, linker: Linker):
         self._l = linker
 
-    def _drop_concat_with_tf_cache(self) -> None:
-        """Release the cached concat_with_tf so the next consumer rebuilds it
-        — unpersisting the old frame, not just dropping the reference (a
-        silent leak of a full-width cached copy of the node table)."""
-        old = self._l._concat_with_tf
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-            reg = self._l.materialization._registry
-            if old in reg:
-                reg.remove(old)
-        self._l._concat_with_tf = None
-
     def compute_tf_table(self, column_name: str) -> DataFrame:
         """Term-frequency table for one column (reference
-        table_management.py:37-93). Computed from the concat and memoised in
-        the linker's TF dict so predict reuses it."""
-        from .internals.term_frequencies import compute_term_frequencies
-
+        table_management.py:37-93). Computed from the concat and cached in
+        the linker's TF dict so predict reuses it; the concat_with_tf cache
+        is released so the next consumer rebuilds it with the new column."""
         tfs = self._l.tf_tables()
         if column_name not in tfs:
-            tfs[column_name] = compute_term_frequencies(
-                self._l.df_concat(), column_name
+            self._l._set_tf_table(
+                column_name,
+                compute_term_frequencies(
+                    self._l.df_concat(),
+                    column_name,
+                    tf_prefix=self._l.settings.term_frequency_adjustment_column_prefix,
+                ),
             )
-            self._drop_concat_with_tf_cache()  # rebuild with the new column
         return tfs[column_name]
 
     def register_term_frequency_lookup(
@@ -1238,8 +1293,7 @@ class LinkerTableManagement:
                 f"TF lookup for {column_name!r} needs columns {sorted(expected)}, "
                 f"got {df.columns}"
             )
-        self._l.tf_tables()[column_name] = df
-        self._drop_concat_with_tf_cache()
+        self._l._set_tf_table(column_name, df)
 
     def register_table_predict(self, df: DataFrame) -> DataFrame:
         """Use a previously saved predict output (e.g. read back from

@@ -47,6 +47,17 @@ def test_missing_columns_reported_per_source(persons):
     assert missing == ["also_invalid", "emails", "full_name", "invalid_col"]
 
 
+def test_sql_snippet_block_on_reports_its_columns(persons):
+    """``block_on("surname", "substr(dob,1,4)")`` reads surname and dob:
+    the function name is not a column, and dob is missing only when the
+    frame lacks it."""
+    s = _settings(
+        cl.ExactMatch("surname"), rules=[block_on("surname", "substr(dob,1,4)")]
+    )
+    assert validate_settings_columns(s, persons.columns) == []
+    assert validate_settings_columns(s, persons.drop("dob").columns) == ["dob"]
+
+
 def test_linker_warns_on_missing_columns(spark, persons, caplog):
     s = _settings(cl.ExactMatch("full_name"), rules=[block_on("dob")])
     with caplog.at_level(logging.WARNING, logger="splink_spark"):

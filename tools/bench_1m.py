@@ -14,7 +14,9 @@ pure Spark expressions (hash-based pseudo-randomness — no Python row loop)
 and cached as parquet. Both engines read the same parquet.
 
 Usage: python tools/bench_1m.py [--rows 1000000] [--skip-duckdb] [--repeat 3]
-Writes BENCH_1M.json at the repo root.
+Writes BENCH_1M.json at the repo root. Spark runs on every CPU in this
+process's affinity mask with half of the host's MemTotal as driver memory;
+SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override either.
 
 The host this runs on shows heavy run-to-run variance (identical Spark runs
 measured 14.6s..53.9s for the same stage, with /proc/stat showing bursts of
@@ -40,6 +42,23 @@ FIRST = ["julia", "oliver", "grace", "amir", "zoe", "noah", "theo", "freya",
 SUR = ["taylor", "smith", "jones", "khan", "li", "brown", "davies", "evans",
        "wilson", "thomas", "clarke", "walker", "wright", "green", "hall", "wood"]
 CITY = ["london", "leeds", "manchester", "bristol", "york", "bath", "derby"]
+
+def host_cpus() -> str:
+    """CPUs this process may run on; SPARK_GRAFT_CPUS overrides."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def host_driver_memory() -> str:
+    """Half of MemTotal from /proc/meminfo (in local mode the driver heap is
+    all the memory Spark gets); SPARK_GRAFT_DRIVER_MEM overrides."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{max(1024, int(line.split()[1]) // 2 // 1024)}m"
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
 
 # shared Fellegi-Sunter model constants (m, u) per comparison gamma=1 level;
 # both engines run EM from the same starting point so the *computation* is
@@ -152,7 +171,7 @@ def run_spark(path: str, cpus: str) -> dict:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", host_driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 1M rows x ~60 bytes of compared columns ~ 60 MB: every blocking
         # self-join fits comfortably as a broadcast hash join, which in
@@ -429,7 +448,7 @@ def cluster_parity_check(path: str, cpus: str) -> dict:
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", host_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(256 * 1024 * 1024))
         .getOrCreate()
     )
@@ -551,7 +570,7 @@ def main() -> None:
             repeat = int(sys.argv[i + 1])
 
     path = os.path.join(CACHE, f"persons_{n_rows}.parquet")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
 
     if not os.path.exists(path):
         from pyspark.sql import SparkSession
@@ -559,7 +578,7 @@ def main() -> None:
         spark = (
             SparkSession.builder.master(f"local[{cpus}]")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "16g")
+            .config("spark.driver.memory", host_driver_memory())
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
