@@ -73,10 +73,8 @@ def _with_labels(linker, df_predict: DataFrame, labels_column: str) -> DataFrame
 
     Keys are (source_dataset, uid) when the job has source datasets — uids
     are only unique per dataset, so a bare-uid join would fan out and attach
-    wrong labels on cross-dataset uid collisions. The label slices broadcast
-    only below the same node-count ceiling the junction join uses."""
-    from .comparison_vectors import BROADCAST_NODES_MAX_ROWS
-
+    wrong labels on cross-dataset uid collisions. Whether the label slices
+    broadcast is the planner's choice."""
     s = linker.settings
     uid = s.unique_id_column_name
     if f"{labels_column}_l" in df_predict.columns:
@@ -95,9 +93,6 @@ def _with_labels(linker, df_predict: DataFrame, labels_column: str) -> DataFrame
         *[F.col(k).alias(f"{k}_r") for k in keys_l],
         F.col(labels_column).alias(f"{labels_column}_r"),
     )
-    n = getattr(concat, "_splink_row_count", None)
-    if n is not None and n <= BROADCAST_NODES_MAX_ROWS:
-        lab_l, lab_r = F.broadcast(lab_l), F.broadcast(lab_r)
     return df_predict.join(lab_l, on=[f"{k}_l" for k in keys_l]).join(
         lab_r, on=[f"{k}_r" for k in keys_l]
     )

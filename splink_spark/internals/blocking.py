@@ -2,8 +2,9 @@
 
 Reference semantics: splink/internals/blocking.py —
 - per-rule join ``l JOIN r ON <rule> WHERE uid_l < uid_r [AND src_l != src_r]``
-  emitting only ``(match_key, join_key_l, join_key_r)`` (:193-226) to keep the
-  shuffle narrow (an algorithmic width optimisation we keep deliberately);
+  emitting only ``(match_key, join_key_l, join_key_r)`` (:193-226); here that
+  ids-only output serves id-pair consumers and exploding rules, while scoring
+  paths carry the compared columns through the join (``output_columns``);
 - multi-rule dedup: rule k adds ``AND NOT (coalesce(rule_1,false) OR ...)``
   (:158-191, 747-830), results unioned with match_key = rule index;
 - exploding rules unnest array columns on both sides first, dedup the distinct
@@ -384,8 +385,7 @@ def block_using_rules(
     ``output_columns`` switches to carry-through output: instead of the
     ids-only pair table (junction re-join shape), the named base columns are
     emitted suffixed ``_l``/``_r`` directly from the join — one join, no
-    junction, no node broadcast. The right plan when the node table is too
-    large to broadcast cheaply but the retained column set is narrow. Not
+    junction. Every scoring path uses it (``build_pairs_with_columns``). Not
     valid with exploding rules (their pair-level dedup must run on ids).
     """
     uid = unique_id_column_name

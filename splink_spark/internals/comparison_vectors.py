@@ -1,12 +1,16 @@
-"""Comparison vectors: re-join blocked id pairs to their columns and compute
+"""Comparison vectors: blocked pairs with their compared columns, and the
 per-comparison gamma values.
 
 Reference: splink/internals/comparison_vector_values.py:41-132 — the junction
 re-join (``blocked_id_pairs b JOIN concat_tf l ON uid_l = b.join_key_l JOIN
-concat_tf r ...``, :98-115) followed by the gamma CASE ladders. The ids-only
-blocking output + this junction join is a deliberate shuffle-width
-optimisation at scale: the wide columns move through exactly two hash joins
-instead of through the blocking join's output.
+concat_tf r ...``, :98-115) followed by the gamma CASE ladders.
+
+Here the blocking join carries the compared columns (a narrow projection of
+the node table) straight into its output (``build_pairs_with_columns``), so
+blocking → gammas → scoring is one pipeline over the node table. The junction
+re-join survives only where an id-pair table is the input
+(``blocked_pairs_with_columns``). Neither shape counts the node table or
+hints a broadcast: the planner and AQE pick the join strategy.
 """
 
 from __future__ import annotations
@@ -44,48 +48,23 @@ def _needed_columns(settings: Settings, concat_with_tf: DataFrame) -> list[str]:
     return cols
 
 
-# node tables at or below this row count are broadcast into the junction
-# join; larger tables either carry columns through the blocking join
-# (build_pairs_with_columns) or sort-merge-join the junction. 200k rows of a
-# narrow projection is ~10-30 MB serialized — comfortably broadcastable;
-# beyond that the per-task hash-build cost of a forced broadcast exceeds the
-# shuffle it saves (measured: a 1M-row forced broadcast junction ran ~3x
-# slower than carry-through on the 1M-row dedupe bench).
-BROADCAST_NODES_MAX_ROWS = 200_000
-
-
 def blocked_pairs_with_columns(
     blocked_pairs: DataFrame,
     concat_with_tf: DataFrame,
     settings: Settings,
     concat_with_tf_right: Optional[DataFrame] = None,
-    broadcast_nodes_max_rows: Optional[int] = BROADCAST_NODES_MAX_ROWS,
 ) -> DataFrame:
-    """The junction re-join (comparison_vector_values.py:98-115).
-
-    Join-strategy note: |pairs| >> |nodes| in any blocked workload, so when
-    the narrow node table is small enough to broadcast we hint it explicitly
-    — otherwise Catalyst sort-merge-joins and shuffles the (much larger) pair
-    table twice. At billions of nodes the hint is skipped and SMJ is correct.
-    The row count is known for free: the concat was already counted when the
-    blocked pairs materialized.
+    """The junction re-join (comparison_vector_values.py:98-115), for callers
+    whose input is an id-pair table: exploding rules, ``score_pairs``,
+    registered or chunked blocked pairs, and predict's narrow-core re-join.
+    The join strategy (broadcast the narrow node table or sort-merge) is the
+    planner's, from the node table's size statistics, and AQE's at runtime.
     """
     uid = settings.unique_id_column_name
     cols = _needed_columns(settings, concat_with_tf)
     narrow_l = concat_with_tf.select([F.col(c).alias(f"{c}_l") for c in cols])
     right_src = concat_with_tf_right if concat_with_tf_right is not None else concat_with_tf
     narrow_r = right_src.select([F.col(c).alias(f"{c}_r") for c in cols])
-    if broadcast_nodes_max_rows:
-        n_nodes = getattr(concat_with_tf, "_splink_row_count", None)
-        if n_nodes is None:
-            n_nodes = concat_with_tf.count()
-            try:
-                concat_with_tf._splink_row_count = n_nodes  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        if n_nodes <= broadcast_nodes_max_rows:
-            narrow_l = F.broadcast(narrow_l)
-            narrow_r = F.broadcast(narrow_r)
 
     join_l = [blocked_pairs["join_key_l"] == narrow_l[f"{uid}_l"]]
     join_r = [blocked_pairs["join_key_r"] == narrow_r[f"{uid}_r"]]
@@ -112,60 +91,37 @@ def build_pairs_with_columns(
     rules,
     settings: Settings,
     nodes_right: Optional[DataFrame] = None,
-    repartition_count: Optional[int] = None,
+    link_type: Optional[str] = None,
+    source_dataset_column_name: Optional[str] = None,
 ) -> DataFrame:
-    """Blocked pairs WITH their compared columns, by whichever join shape is
-    right for the node-table size:
+    """Blocked pairs WITH their compared columns: the needed node columns
+    (``_needed_columns``) are carried through the blocking join itself — one
+    join per rule, no ids-only pair table, no junction re-join, no node
+    count. The planner and AQE choose the join strategy from the node
+    table's statistics (broadcast one side of a small table, sort-merge a
+    large one).
 
-    - small node table (<= BROADCAST_NODES_MAX_ROWS) or exploding rules:
-      ids-only blocking join + broadcast junction re-join (narrow shuffle,
-      two broadcast hash joins — the 100 TB shape when records are wide);
-    - large node table, no exploding rules: carry the needed columns through
-      the blocking join directly (one shuffle of the narrow node projection
-      on the blocking keys, no junction, no mega-broadcast — the shape a
-      single-node engine's planner picks, and the right one when the
-      retained column set is narrow).
+    Exploding rules are the exception: their pair dedup must run on ids, so
+    they block ids-only and re-attach the columns through the junction join.
 
-    ``repartition_count`` (small-table path only) spreads the ids-only join
-    output before the junction so a fuzzy-metric stage keeps full
-    parallelism under AQE coalescing.
+    ``link_type`` defaults to the settings'; ``source_dataset_column_name``
+    is passed through to ``block_using_rules``.
     """
     from .blocking import block_using_rules
 
-    s = settings
-    sd = s.source_dataset_column_name if s.needs_source_dataset else None
-    can_carry = not any(r.exploded_columns for r in rules)
-    n_nodes = getattr(nodes, "_splink_row_count", None)
-    if can_carry:
-        if n_nodes is None:
-            n_nodes = nodes.count()
-            try:
-                nodes._splink_row_count = n_nodes  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        if n_nodes > BROADCAST_NODES_MAX_ROWS:
-            cols = _needed_columns(s, nodes)
-            return block_using_rules(
-                nodes,
-                rules,
-                link_type=s.link_type,
-                unique_id_column_name=s.unique_id_column_name,
-                source_dataset_column_name=sd,
-                nodes_right=nodes_right,
-                output_columns=cols,
-            )
-    pairs = block_using_rules(
-        nodes,
-        rules,
-        link_type=s.link_type,
-        unique_id_column_name=s.unique_id_column_name,
-        source_dataset_column_name=sd,
+    block = dict(
+        link_type=link_type or settings.link_type,
+        unique_id_column_name=settings.unique_id_column_name,
+        source_dataset_column_name=source_dataset_column_name,
         nodes_right=nodes_right,
     )
-    if repartition_count:
-        pairs = pairs.repartition(repartition_count)
-    return blocked_pairs_with_columns(
-        pairs, nodes, s, concat_with_tf_right=nodes_right
+    if any(r.exploded_columns for r in rules):
+        pairs = block_using_rules(nodes, rules, **block)
+        return blocked_pairs_with_columns(
+            pairs, nodes, settings, concat_with_tf_right=nodes_right
+        )
+    return block_using_rules(
+        nodes, rules, output_columns=_needed_columns(settings, nodes), **block
     )
 
 

@@ -42,6 +42,14 @@ import os as _os
 DRIVER_SOLVE_MAX_EDGES = int(_os.environ.get("SPLINK_SPARK_CC_DRIVER_MAX_EDGES", 5_000_000))
 
 
+def _non_null_edges(edges: DataFrame, edge_l_col: str, edge_r_col: str) -> DataFrame:
+    """Edges with both endpoints set. A null endpoint would factorize to
+    code -1 and silently index the last element of the rank array; the
+    distributed join path drops such edges too. Dropping them in Spark also
+    keeps the collected id columns int64 (or string), never float."""
+    return edges.where(F.col(edge_l_col).isNotNull() & F.col(edge_r_col).isNotNull())
+
+
 def _solve_cc_driver(
     edges: DataFrame,
     nodes: Optional[DataFrame],
@@ -49,7 +57,7 @@ def _solve_cc_driver(
     edge_l_col: str,
     edge_r_col: str,
     assignments_only: bool = False,
-    pdf=None,
+    table=None,
 ) -> DataFrame:
     """Driver-side union-find over a collected edge list.
 
@@ -58,19 +66,18 @@ def _solve_cc_driver(
     (min rank in component) maps back to the min node id — identical
     semantics to the distributed loop and to the reference's SQL loop.
 
-    ``pdf``: the already-collected edge pandas frame, when the caller's
-    cutover probe fetched it (avoids a second collect of the same rows).
+    The edges travel both ways as Arrow (``toArrow`` / ``createDataFrame``
+    of a ``pyarrow.Table``), never row by row. ``table``: the already
+    collected non-null edges, when the caller's cutover probe fetched them
+    (avoids a second collect of the same rows).
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     spark = edges.sparkSession
-    if pdf is None:
-        pdf = edges.toPandas()
-    # null endpoints would factorize to code -1 and silently index the last
-    # element of the rank array, corrupting assignments; the distributed
-    # join path drops such edges — match it
-    pdf = pdf.dropna(subset=[edge_l_col, edge_r_col])
+    if table is None:
+        table = _non_null_edges(edges, edge_l_col, edge_r_col).toArrow()
     id_type = edges.schema[edge_l_col].dataType
 
     from pyspark.sql.types import StructField, StructType
@@ -78,11 +85,12 @@ def _solve_cc_driver(
     schema = StructType(
         [StructField("node", id_type), StructField("cluster_id", id_type)]
     )
-    if len(pdf) == 0:
+    if table.num_rows == 0:
         assignments = spark.createDataFrame([], schema)
     else:
-        both = pd.concat(
-            [pdf[edge_l_col], pdf[edge_r_col]], ignore_index=True
+        n_edges = table.num_rows
+        both = np.concatenate(
+            [table.column(edge_l_col).to_numpy(), table.column(edge_r_col).to_numpy()]
         )
         codes, uniques = pd.factorize(both)
         n = len(uniques)
@@ -90,8 +98,8 @@ def _solve_cc_driver(
         order = np.argsort(uniq_arr, kind="stable")
         rank = np.empty(n, dtype=np.int64)
         rank[order] = np.arange(n, dtype=np.int64)
-        li = rank[codes[: len(pdf)]]
-        ri = rank[codes[len(pdf):]]
+        li = rank[codes[:n_edges]]
+        ri = rank[codes[n_edges:]]
         parent = np.arange(n, dtype=np.int64)
         while True:
             mn = np.minimum(parent[li], parent[ri])
@@ -105,17 +113,21 @@ def _solve_cc_driver(
             if np.array_equal(parent[li], parent[ri]):
                 break
         sorted_ids = uniq_arr[order]
-        out = pd.DataFrame(
-            {"node": sorted_ids, "cluster_id": sorted_ids[parent]}
-        )
         # self-rooted rows (node == its component minimum) are redundant:
         # every consumer coalesces a missing assignment to the node id, so
         # dropping them here shrinks the broadcast/join side by the number
         # of components for free
-        out = out[out["node"] != out["cluster_id"]]
+        moved = parent != np.arange(n, dtype=np.int64)
+        arrow_type = table.schema.field(edge_l_col).type
+        out = pa.table(
+            {
+                "node": pa.array(sorted_ids[moved], type=arrow_type),
+                "cluster_id": pa.array(sorted_ids[parent[moved]], type=arrow_type),
+            }
+        )
         assignments = spark.createDataFrame(out, schema)
         try:
-            assignments._splink_row_count = len(out)  # type: ignore[attr-defined]
+            assignments._splink_row_count = out.num_rows  # type: ignore[attr-defined]
         except Exception:
             pass
 
@@ -247,11 +259,15 @@ def solve_connected_components(
         # cutover+1 rows — under the cutover this IS the full edge list (one
         # action saved per solve); over it, the wasted work is bounded by
         # the cutover and the distributed loop takes over
-        probe = edges.limit(cutover + 1).toPandas()
-        if len(probe) <= cutover:
+        probe = (
+            _non_null_edges(edges, edge_l_col, edge_r_col)
+            .limit(cutover + 1)
+            .toArrow()
+        )
+        if probe.num_rows <= cutover:
             return _solve_cc_driver(
                 edges, nodes, node_col, edge_l_col, edge_r_col,
-                assignments_only=assignments_only, pdf=probe,
+                assignments_only=assignments_only, table=probe,
             )
     # symmetric neighbour list (reference :169-187 reverse-union)
     fwd = edges.select(F.col(edge_l_col).alias("node"), F.col(edge_r_col).alias("nbr"))

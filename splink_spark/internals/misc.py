@@ -67,6 +67,19 @@ def default_parallelism(spark) -> int:
             return 200
 
 
+def scan_partitions(df) -> "int | None":
+    """Partition count of a frame whose plan has no exchange (its input
+    scans' splits), read without running a job. None when a shuffle or a
+    broadcast sets it — resolving those would execute them (AQE query
+    stages, broadcast builds) — and on Spark Connect (no RDD access)."""
+    try:
+        if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+            return None
+        return df.rdd.getNumPartitions()
+    except (AttributeError, NotImplementedError):  # Spark Connect
+        return None
+
+
 def optimizer_barrier(col):
     """Value-stable identity wrapper that Catalyst cannot optimize through:
     ``shuffle(array(col))[0]`` — shuffling a one-element array is the

@@ -26,8 +26,13 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import functions as F
 
-from .blocking import BlockingRule, CustomRule, block_using_rules
-from .comparison_vectors import blocked_pairs_with_columns, compute_comparison_vectors
+from .blocking import BlockingRule, CustomRule, _pair_filter, block_using_rules
+from .comparison_vectors import (
+    _needed_columns,
+    blocked_pairs_with_columns,
+    build_pairs_with_columns,
+    compute_comparison_vectors,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -43,7 +48,7 @@ def _cartesian_total(linker) -> float:
     s = linker.settings
     concat = linker.df_concat()
     if not s.needs_source_dataset:
-        n = getattr(concat, "_splink_row_count", None) or concat.count()
+        n = concat.count()
         return n * (n - 1) / 2
     counts = [
         r["count"]
@@ -237,7 +242,7 @@ def estimate_u_using_random_sampling(
     # TF join would only widen every row this stage touches (the TF build
     # itself still happens exactly once, at the first consumer that scores)
     concat = _concat_for_gammas(linker)
-    n = getattr(concat, "_splink_row_count", None) or concat.count()
+    n = concat.count()
     target_sample = math.sqrt(max_pairs * 2)
     fraction = min(1.0, target_sample / max(n, 1))
 
@@ -252,18 +257,18 @@ def estimate_u_using_random_sampling(
         bucket = F.pmod(F.xxhash64(F.col(uid), F.lit(seed or 0)), F.lit(modulus))
     else:
         raise ValueError("sampling_method must be 'xxhash64' or 'minstd'")
-    sample = concat.where(bucket < threshold)
-    # The TRUE-rule self-join plans as a CartesianProduct whose task count is
-    # |parts_l| x |parts_r| — inherited from the (wide) parent, that's a grid
-    # of thousands of micro-tasks each paying pandas-UDF invocation overhead
-    # for a table of only ~sqrt(2*max_pairs) rows. Coalesce the sample to
-    # ~sqrt(cores) partitions so the cartesian emits ~cores right-sized tasks,
-    # and cache it so both join sides scan the tiny table, not the concat.
+    # The TRUE-rule self-join is a nested-loop join over a table of only
+    # ~sqrt(2*max_pairs) rows: inheriting the (wide) parent's partitions
+    # would make a grid of micro-tasks. Coalesce the sample to one stream
+    # partition per core and cache it lazily (the join's first task fills
+    # the cache), so both join sides scan the tiny table, not the concat.
     from .misc import default_parallelism
 
-    side = max(2, math.isqrt(2 * default_parallelism(sample.sparkSession)))
-    sample = sample.coalesce(side).persist()
-    sample._splink_row_count = sample.count()  # type: ignore[attr-defined]
+    sample = (
+        concat.where(bucket < threshold)
+        .coalesce(default_parallelism(concat.sparkSession))
+        .persist()
+    )
 
     level_keys: list[tuple[str, int]] = []
     aggs = []
@@ -280,48 +285,24 @@ def estimate_u_using_random_sampling(
         aggs.append(F.sum(F.when(F.col(g) != -1, 1).otherwise(0)).alias(f"{g}__total"))
 
     # pairs must span the SAME space predict scores: link_only must not count
-    # within-dataset pairs, and with per-dataset-unique uids the pair keys
-    # (and the junction join) need the source dataset carried through —
-    # a bare-uid join fans out on cross-dataset uid collisions
+    # within-dataset pairs, and with per-dataset-unique uids the pair order
+    # needs the source dataset
     sd = s.source_dataset_column_name if s.needs_source_dataset else None
 
-    def _ordered_once(pairs):
-        """Keep each unordered pair exactly once (drops self-pairs) —
-        (source_dataset, uid) lexicographic when datasets exist, mirroring
-        blocking._pair_filter."""
-        if sd and "source_dataset_l" in pairs.columns:
-            ordered = (F.col("source_dataset_l") < F.col("source_dataset_r")) | (
-                (F.col("source_dataset_l") == F.col("source_dataset_r"))
-                & (F.col("join_key_l") < F.col("join_key_r"))
-            )
-            if s.link_type == "link_only":
-                ordered = ordered & (
-                    F.col("source_dataset_l") != F.col("source_dataset_r")
-                )
-            return pairs.where(ordered)
-        return pairs.where(F.col("join_key_l") < F.col("join_key_r"))
-
     def count_chunk(rhs) -> dict:
-        if rhs is sample:
-            pairs = block_using_rules(
-                sample, [CustomRule("TRUE")], link_type=s.link_type,
-                unique_id_column_name=uid, source_dataset_column_name=sd,
-            )
-        else:
+        # the sample's compared columns are carried through the cross join
+        with_cols = block_using_rules(
+            sample, [CustomRule("TRUE")], link_type=s.link_type,
+            unique_id_column_name=uid, source_dataset_column_name=sd,
+            nodes_right=None if rhs is sample else rhs,
+            output_columns=_needed_columns(s, sample),
+        )
+        if rhs is not sample:
             # full-sample x chunk: block_using_rules' nodes_right branch
             # assumes disjoint tables, so the once-per-unordered-pair filter
-            # is applied manually — each pair lands in exactly one chunk
-            # (the one containing its greater endpoint)
-            pairs = _ordered_once(
-                block_using_rules(
-                    sample, [CustomRule("TRUE")], link_type=s.link_type,
-                    unique_id_column_name=uid, source_dataset_column_name=sd,
-                    nodes_right=rhs,
-                )
-            )
-        with_cols = blocked_pairs_with_columns(
-            pairs, sample, s, concat_with_tf_right=rhs if rhs is not sample else None
-        )
+            # is applied here — each pair lands in exactly one chunk (the
+            # one containing its greater endpoint)
+            with_cols = with_cols.where(_pair_filter(s.link_type, uid, sd))
         cv = compute_comparison_vectors(with_cols, s)
         return cv.agg(*aggs).collect()[0].asDict()
 
@@ -441,16 +422,15 @@ def estimate_m_from_label_column(linker, label_column: str) -> dict:
     from .blocking import block_on
 
     s = linker.settings
-    pairs = block_using_rules(
+    with_cols = build_pairs_with_columns(
         linker.df_concat_with_tf(),
         [block_on(label_column)],
+        s,
         link_type=s.link_type if not s.needs_source_dataset else "link_and_dedupe",
-        unique_id_column_name=s.unique_id_column_name,
         source_dataset_column_name=s.source_dataset_column_name
         if s.needs_source_dataset
         else None,
     )
-    with_cols = blocked_pairs_with_columns(pairs, linker.df_concat_with_tf(), s)
     cv = compute_comparison_vectors(with_cols, s)
     return _m_from_cv(s, cv)
 
@@ -691,18 +671,13 @@ def estimate_parameters_using_em(
                 "at p*=%.4f", p_hat, max_pairs, p_star,
             )
 
-    # blocked pairs → comparison vectors, materialized ONCE, then the
-    # loop-invariant agreement-pattern aggregation. build_pairs_with_columns
-    # picks ids+broadcast-junction (small node tables, repartitioned so a
-    # fuzzy-gamma stage keeps full parallelism under AQE coalescing) or
-    # carry-through blocking (large node tables — no mega-broadcast).
-    from .comparison_vectors import build_pairs_with_columns
-
+    # blocked pairs (compared columns carried through the blocking join) →
+    # comparison vectors → the loop-invariant agreement-pattern aggregation
     with_cols = build_pairs_with_columns(
         nodes, [rule], s,
-        repartition_count=linker.materialization.repartition_count(
-            nodes, "blocked_pairs"
-        ),
+        source_dataset_column_name=s.source_dataset_column_name
+        if s.needs_source_dataset
+        else None,
     )
     cv = compute_comparison_vectors(with_cols, s)
     gamma_cols = [c.gamma_column_name for c in active]

@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from .internals.blocking import BlockingRule, block_using_rules, count_comparisons_per_rule
 from .internals.comparison_vectors import (
-    _needed_columns,
     blocked_pairs_with_columns,
+    build_pairs_with_columns,
     compute_comparison_vectors,
 )
 from .internals.functions import register_udfs
@@ -196,18 +196,6 @@ class Linker:
             self._concat = df
         return self._concat
 
-    def concat_row_count(self) -> int:
-        """Row count of df_concat, computed once and cached."""
-        concat = self.df_concat()
-        n = getattr(concat, "_splink_row_count", None)
-        if n is None:
-            n = concat.count()
-            try:
-                concat._splink_row_count = n  # type: ignore[attr-defined]
-            except Exception:
-                pass
-        return n
-
     def tf_tables(self) -> dict[str, DataFrame]:
         """One TF table per TF column, built once per linker and persisted
         lazily (the first consumer's broadcast populates it). Every consumer
@@ -264,28 +252,23 @@ class Linker:
     def df_concat_with_tf(self) -> DataFrame:
         """``__splink__df_concat_with_tf`` (vertically_concatenate.py:74-81).
 
-        Persisted: it feeds both sides of the blocking join AND both sides of
-        the junction re-join — 4 scans of the same plan otherwise (the
-        reference materializes exactly this stage, spark/database_api.py:
-        292-312). The forced count doubles as the node count the junction
-        join's broadcast decision needs.
+        Persisted lazily: it feeds both sides of every blocking join and
+        predict's node re-join (the reference materializes exactly this
+        stage, spark/database_api.py:292-312); the first consumer's job
+        populates the cache.
         """
         if self._concat_with_tf is None:
             df = join_term_frequencies(self.df_concat(), self.tf_tables())
-            # single-file inputs arrive as one partition; the blocking join
-            # would then probe on one core — spread before persisting
-            from .internals.misc import default_parallelism
+            # single-file inputs arrive as one partition; a broadcast
+            # blocking join would then stream on one core — spread before
+            # persisting. The count is the concat's, i.e. its input scans'
+            # splits (the broadcast TF joins keep them), read without a job.
+            from .internals.misc import default_parallelism, scan_partitions
 
             target = default_parallelism(self.spark)
-            try:
-                nparts = df.rdd.getNumPartitions()
-            except Exception:  # Spark Connect: no RDD access
-                nparts = None
+            nparts = scan_partitions(self.df_concat())
             if nparts is not None and nparts < target:
                 df = df.repartition(target)
-            # lazy persist — the first consumer (a blocking join's broadcast
-            # build or a count in build_pairs_with_columns) populates the
-            # cache; those callers set _splink_row_count themselves
             df = self.materialization.materialize(
                 df, "concat_with_tf", eager=False
             )
@@ -337,16 +320,11 @@ class Linker:
         return pairs
 
     def pairs_with_columns(
-        self,
-        rules: Optional[Sequence[BlockingRule]] = None,
-        repartition_for_udfs: bool = True,
+        self, rules: Optional[Sequence[BlockingRule]] = None
     ) -> DataFrame:
-        """Blocked pairs with compared columns attached, choosing between
-        ids+broadcast-junction (small node tables / exploding rules) and
-        carry-through blocking (large node tables) — see
+        """Blocked pairs with their compared columns carried through the
+        blocking join (ids + junction for exploding rules) — see
         comparison_vectors.build_pairs_with_columns."""
-        from .internals.comparison_vectors import build_pairs_with_columns
-
         s = self.settings
         rules = list(rules or s.blocking_rules_to_generate_predictions)
         concat = self.df_concat_with_tf()
@@ -355,20 +333,11 @@ class Linker:
             split = split_link_only_two_datasets(concat, s.source_dataset_column_name)
             if split is not None:
                 nodes, nodes_right = split
-                # the split frames are filters of the persisted concat — the
-                # broadcast/carry decision can reuse the parent's row count
-                # as an upper bound
-                parent_n = getattr(concat, "_splink_row_count", None)
-                if parent_n is not None:
-                    try:
-                        nodes._splink_row_count = parent_n  # type: ignore[attr-defined]
-                    except Exception:
-                        pass
-        n_parts = None
-        if repartition_for_udfs:
-            n_parts = self.materialization.repartition_count(concat, "blocked_pairs")
         return build_pairs_with_columns(
-            nodes, rules, s, nodes_right=nodes_right, repartition_count=n_parts
+            nodes, rules, s, nodes_right=nodes_right,
+            source_dataset_column_name=s.source_dataset_column_name
+            if s.needs_source_dataset
+            else None,
         )
 
     def comparison_vectors(self, pairs: Optional[DataFrame] = None) -> DataFrame:
@@ -407,7 +376,7 @@ class LinkerInference:
         lazily persisted, and the returned wide DataFrame re-attaches the
         record columns by joining the node table back on. Downstream
         consumers that only need scores + ids (clustering, truth-space,
-        threshold sweeps) read the cached core and never re-run the junction
+        threshold sweeps) read the cached core and never re-run the blocking
         join or the fuzzy-metric UDFs; consumers of the wide row pay only
         the (broadcastable) node re-join. This is the same materialization
         point the reference marks as ``__splink__df_predict``, kept narrow
@@ -432,11 +401,9 @@ class LinkerInference:
         if chunks_l <= 1 and chunks_r <= 1:
             s = self._l.settings
             # the narrow core below is the lineage break, so the blocking
-            # join is NOT separately materialized — blocking → [junction →]
-            # gamma → score run as ONE fused pipeline into the core's
-            # persist. pairs_with_columns picks ids+broadcast-junction or
-            # carry-through by node-table size, and repartitions the
-            # small-table path so a fuzzy-UDF stage keeps full parallelism.
+            # join is NOT separately materialized — blocking (carrying the
+            # compared columns) → gamma → score run as ONE fused pipeline
+            # into the core's persist.
             if self._l._registered_blocked_pairs is not None:
                 # user-registered pair table replaces the blocking join
                 # (reference table_management.py:95-140)
@@ -488,7 +455,7 @@ class LinkerInference:
                 # WHERE below the persist is 2x: Catalyst substitutes the
                 # score aliases into the predicate and pushes the whole
                 # scoring expression tree (gamma CASE ladders + similarity
-                # UDFs) into the junction join condition, evaluating it twice
+                # UDFs) into the blocking join condition, evaluating it twice
                 # per pair (measured; see plan test). Re-aliasing the score
                 # columns through a nondeterministic identity
                 # (shuffle(array(x))[0] — exact same value, O(1) per row)
@@ -573,10 +540,7 @@ class LinkerInference:
     def deterministic_link(self) -> DataFrame:
         """Pairs from the blocking rules alone, no scoring
         (inference.py:223-292)."""
-        pairs = self._l.blocked_pairs(materialize=False)
-        return blocked_pairs_with_columns(
-            pairs, self._l.df_concat_with_tf(), self._l.settings
-        )
+        return self._l.pairs_with_columns()
 
     def score_pairs(self, id_pairs: DataFrame) -> DataFrame:
         """Score caller-supplied id pairs (inference.py:746-1021). ``id_pairs``
@@ -608,16 +572,7 @@ class LinkerInference:
         ]
         left_tf = join_term_frequencies(left, self._l.tf_tables())
         right_tf = join_term_frequencies(right, self._l.tf_tables())
-        pairs = block_using_rules(
-            left_tf,
-            rules,
-            link_type=s.link_type,
-            unique_id_column_name=s.unique_id_column_name,
-            nodes_right=right_tf,
-        )
-        with_cols = blocked_pairs_with_columns(
-            pairs, left_tf, s, concat_with_tf_right=right_tf
-        )
+        with_cols = build_pairs_with_columns(left_tf, rules, s, nodes_right=right_tf)
         cv = compute_comparison_vectors(with_cols, s)
         return predict_from_comparison_vectors(
             cv,
@@ -724,21 +679,7 @@ class LinkerInference:
         probe = self._l._cache_probe(
             join_term_frequencies(new_records, self._l.tf_tables())
         )
-        block = dict(
-            link_type=s.link_type,
-            unique_id_column_name=s.unique_id_column_name,
-            nodes_right=probe,
-        )
-        if any(r.exploded_columns for r in rules):
-            pairs = block_using_rules(base, rules, **block)
-            with_cols = blocked_pairs_with_columns(
-                pairs, base, s, concat_with_tf_right=probe,
-                broadcast_nodes_max_rows=None,
-            )
-        else:
-            with_cols = block_using_rules(
-                base, rules, output_columns=_needed_columns(s, base), **block
-            )
+        with_cols = build_pairs_with_columns(base, rules, s, nodes_right=probe)
         cv = compute_comparison_vectors(with_cols, s)
         return predict_from_comparison_vectors(cv, s)
 
@@ -747,13 +688,10 @@ class LinkerInference:
         (inference.py predict_within)."""
         s = self._l.settings
         new_tf = join_term_frequencies(new_records, self._l.tf_tables())
-        pairs = block_using_rules(
-            new_tf,
-            s.blocking_rules_to_generate_predictions,
+        with_cols = build_pairs_with_columns(
+            new_tf, s.blocking_rules_to_generate_predictions, s,
             link_type="dedupe_only",
-            unique_id_column_name=s.unique_id_column_name,
         )
-        with_cols = blocked_pairs_with_columns(pairs, new_tf, s)
         cv = compute_comparison_vectors(with_cols, s)
         return predict_from_comparison_vectors(cv, s)
 

@@ -209,6 +209,34 @@ def test_cc_driver_null_edge_ids_dropped(spark):
     assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4}
 
 
+def test_cc_driver_arrow_solve_string_ids_with_null_endpoint(spark):
+    """The Arrow driver solve equals the distributed loop on composite string
+    ids when some edges have a null endpoint, and keeps the id type."""
+    edges_df = spark.createDataFrame(
+        [
+            ("ds0-__-001", "ds1-__-002"),
+            ("ds1-__-002", "ds0-__-003"),
+            ("ds1-__-009", "ds0-__-008"),
+            (None, "ds0-__-004"),
+            ("ds1-__-005", None),
+            ("ds0-__-003", "ds0-__-000"),
+        ],
+        "node_id_l string, node_id_r string",
+    )
+    ids = ["ds0-__-000", "ds0-__-001", "ds0-__-003", "ds0-__-004", "ds0-__-008",
+           "ds1-__-002", "ds1-__-005", "ds1-__-009", "ds1-__-010"]
+    nodes_df = spark.createDataFrame([(x,) for x in ids], "node_id string")
+    fast = solve_connected_components(edges_df, nodes_df)
+    slow = solve_connected_components(edges_df, nodes_df, driver_solve_max_edges=0)
+    assert fast.schema == slow.schema
+    got_fast = {r["node_id"]: r["cluster_id"] for r in fast.collect()}
+    got_slow = {r["node_id"]: r["cluster_id"] for r in slow.collect()}
+    assert got_fast == got_slow
+    assert got_fast["ds1-__-002"] == "ds0-__-000"
+    assert got_fast["ds0-__-004"] == "ds0-__-004"
+    assert len(got_fast) == len(ids)
+
+
 def test_distributed_cc_chain_logarithmic_rounds(spark):
     """Pointer jumping must converge a chain graph in O(log diameter) delta
     rounds (the 100 TB worst case) — and the solver reports the round count

@@ -1,7 +1,7 @@
 """Physical-plan assertions: the scale properties SURVEY §4 promises must be
 visible in ``.explain`` — broadcast TF joins, equi-join blocking (no
 nested-loop for equality rules), column pruning down to the parquet scan,
-broadcast junction joins for small node tables."""
+planner-chosen broadcasts for small node tables, no jobs in plan building."""
 
 from __future__ import annotations
 
@@ -69,13 +69,35 @@ def test_tf_join_is_broadcast(spark, parquet_persons):
     assert "BroadcastHashJoin" in plan, "TF re-join must broadcast the tf table"
 
 
+def _top_level_joins(plan) -> list[str]:
+    """Join operators of a physical plan, not descending into query stages
+    or cached relations (their plans are separate executions)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "ResultQueryStage":  # the final stage's wrapper
+            node = node.plan()
+        if "Join" in node.nodeName():
+            out.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def test_junction_join_broadcasts_small_nodes(spark, parquet_persons):
+    """predict's node re-join carries no broadcast hint and no node count:
+    the planner and AQE (Spark's default) choose, and the 12-row node table
+    ends up broadcast into both re-joins."""
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
     linker = _linker(parquet_persons)
-    scored = linker.inference.predict()
-    plan = _plan(scored)
-    assert "SortMergeJoin" not in plan, (
-        "12-row node table must broadcast through the junction re-join"
-    )
+    try:
+        scored = linker.inference.predict()
+        scored.collect()
+        final = scored._jdf.queryExecution().executedPlan().executedPlan()
+        assert _top_level_joins(final) == ["BroadcastHashJoin"] * 2, final.toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        linker.misc.invalidate_cache()
 
 
 def test_column_pruning_reaches_scan(spark, parquet_persons):
@@ -108,10 +130,10 @@ def test_whole_stage_codegen_covers_scoring(spark, parquet_persons):
     )
 
 
-def test_carry_through_blocking_matches_junction(spark, monkeypatch):
-    """Above the broadcast threshold the blocking join carries columns
-    through directly; output must be identical to the ids+junction path."""
-    import splink_spark.internals.comparison_vectors as cvmod
+def test_carry_through_blocking_matches_junction(spark):
+    """The blocking join carries the compared columns through; its output
+    must equal the ids-only pair table re-joined through the junction, rows
+    and column order both."""
     from splink_spark import Linker
 
     rows = [
@@ -119,31 +141,56 @@ def test_carry_through_blocking_matches_junction(spark, monkeypatch):
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["unique_id", "name", "grp", "seg"])
+    settings = SettingsCreator(
+        comparisons=[
+            cl.ExactMatch("name"),
+            cl.ExactMatch("seg", term_frequency_adjustments=True),
+        ],
+        blocking_rules_to_generate_predictions=[block_on("grp")],
+        probability_two_random_records_match=0.1,
+    )
+    linker = Linker(df, settings)
+    carry = linker.comparison_vectors()
+    junction = linker.comparison_vectors(pairs=linker.blocked_pairs())
+    assert carry.columns == junction.columns
+    carry_rows = sorted(tuple(r) for r in carry.collect())
+    assert carry_rows == sorted(tuple(r) for r in junction.collect())
+    assert len(carry_rows) > 0
 
-    def settings():
-        import splink_spark.internals.comparison_library as cl
-        from splink_spark import SettingsCreator, block_on
 
-        return SettingsCreator(
-            comparisons=[
-                cl.ExactMatch("name"),
-                cl.ExactMatch("seg", term_frequency_adjustments=True),
-            ],
-            blocking_rules_to_generate_predictions=[block_on("grp")],
-            probability_two_random_records_match=0.1,
+def test_predict_and_em_build_without_jobs(spark, parquet_persons, monkeypatch):
+    """Building predict() and an EM session up to its agreement-pattern
+    collect submit no Spark job: no node count, no partition probe and no
+    broadcast build run inside plan building."""
+    sc = spark.sparkContext
+    linker = _linker(parquet_persons)
+    group = "plan_building_jobs"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cls = type(parquet_persons)
+    collect = cls.collect
+    jobs_at_collect = []
+
+    def counting_collect(self):
+        jobs_at_collect.append(jobs())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    sc.setJobGroup(group, group)
+    try:
+        linker.inference.predict(threshold_match_probability=0.5)
+        assert jobs() == 0
+        linker.training.estimate_parameters_using_expectation_maximisation(
+            block_on("surname")
         )
-
-    def cv_rows(linker):
-        out = linker.comparison_vectors().collect()
-        cols = sorted(out[0].asDict().keys()) if out else []
-        return sorted(tuple(r[c] for c in cols) for r in out), cols
-
-    junction, cols_j = cv_rows(Linker(df, settings()))
-    monkeypatch.setattr(cvmod, "BROADCAST_NODES_MAX_ROWS", 10)
-    carry, cols_c = cv_rows(Linker(df, settings()))
-    assert cols_j == cols_c
-    assert junction == carry
-    assert len(junction) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        linker.misc.invalidate_cache()
+    assert jobs_at_collect[0] == 0, jobs_at_collect
 
 
 def test_thresholded_predict_persists_only_survivors_one_scoring_pass(
